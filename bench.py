@@ -352,6 +352,10 @@ def main() -> None:
     # reader would otherwise have to reconstruct from 80 cold numbers.
     # Groupings are the queries whose cold pays each family's build;
     # queries not listed are ordinary cold (codegen + scan warmup).
+    # Each value sums WHOLE-QUERY cold times (codegen + scan warmup +
+    # staging), so it is an upper bound on the staging build alone.
+    # Family members absent from both cold dicts contribute nothing and
+    # are listed under staging_cold_missing, so a gap is never silent.
     staged_families = {
         "ann_serving_index": ("ann_lsh_topk", "ivf_topk", "pq_topk",
                               "ivf_pq_topk"),
@@ -372,10 +376,15 @@ def main() -> None:
         fam: round(sum(both_cold.get(q, 0.0) for q in qs_), 3)
         for fam, qs_ in staged_families.items()
     }
+    staging_missing = {
+        fam: [q for q in qs_ if q not in both_cold]
+        for fam, qs_ in staged_families.items()
+    }
     # Full detail (cold per-query + extras) on stderr for NOTES/PLAN_AUDIT.
     print(json.dumps({"cold_queries": cold, "extra_queries": extra,
                       "extra_cold_queries": extra_cold,
-                      "staging_cold_families": staging_cold}),
+                      "staging_cold_families": staging_cold,
+                      "staging_cold_missing": staging_missing}),
           file=sys.stderr, flush=True)
     spark.stop()
     # LAST line on stdout: the same short headline dict.

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from .session import configure
-from .memo import evict_stale
+from .memo import session_memo
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -48,10 +48,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Keyed by (applicationId, sf_dir, name): a DataFrame handle is bound to
-# the SparkSession that built it, so after a session stop/restart the old
-# entries must not be returned (their JVM plans are dead). Guarded by a
-# lock — cache_table may be called from pipeline stages running in
+# Session memo (memo.py) keyed by (applicationId, sf_dir, name). Guarded
+# by a lock — cache_table may be called from pipeline stages running in
 # threads.
 _CACHED: dict[tuple[str, str, str], DataFrame] = {}
 _CACHE_LOCK = __import__("threading").Lock()
@@ -78,12 +76,9 @@ def cache_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     MEMORY_AND_DISK (the `cache()` default) degrades gracefully when a
     partition doesn't fit.
     """
-    key = _cache_key(spark, sf_dir, name)
     with _CACHE_LOCK:
-        if key not in _CACHED:
-            evict_stale(_CACHED, key[0])
-            _CACHED[key] = load(spark, sf_dir, name).cache()
-        return _CACHED[key]
+        return session_memo(_CACHED, _cache_key(spark, sf_dir, name),
+                            lambda: load(spark, sf_dir, name).cache())
 
 
 def uncache_table(spark: SparkSession, sf_dir: str, name: str) -> None:
@@ -125,9 +120,9 @@ def widen_scan(df: DataFrame, key: str) -> DataFrame:
     so locally every scan stage runs as exactly ONE task and any heavy
     per-row work layered on it (exact-percentile partial aggregation,
     hyperplane/codebook HOF arithmetic, from_json parsing) serializes on
-    one core. This is the generalization of `operators/dedup.py:_widen`
-    (in the engine since r2 for the shingle family) to the other heavy
-    map stages, measured per consumer in OPTIMIZATION_r12.md.
+    one core. Used by the shingle/token stages of the dedup and curation
+    families and by the other heavy map stages, measured per consumer in
+    OPTIMIZATION_r12.md.
 
     Scale honesty: the width probe is `inputFiles()` — at 100 TB a table
     scan is already split into ~128 MB tasks across many files, the probe

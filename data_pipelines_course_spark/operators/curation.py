@@ -341,7 +341,7 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a broadcast join under AQE. At 100 TB the only unavoidable
     corpus shuffles remain the content-hash groupBy and the per-doc
     gram count — everything else is map-side."""
-    from .dedup import _GRAMS5_OF_W, _widen, _WORDS
+    from .dedup import _GRAMS5_OF_W, _WORDS
 
     docs = load(spark, sf_dir, "documents")
     curated = curate(docs.filter(F.col("doc_id") % 10 != 0))
@@ -349,7 +349,7 @@ def corpus_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench and train branches are disjoint filters of ONE 5-gram
     # explode — materialize its (doc_id, hash) digests once instead of
     # exploding the corpus per branch.
-    gh = (_widen(docs)
+    gh = (widen_scan(docs, "doc_id")
           .select("doc_id", F.expr(_WORDS).alias("w"))
           .filter(F.size("w") >= _NGRAM_N)
           .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))
@@ -433,7 +433,7 @@ def curation_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan is 100 TB. Representative attribution: a duplicate cluster
     counts toward the source of its KEPT (min doc_id) representative,
     matching what actually ships."""
-    from .dedup import _GRAMS5_OF_W, _widen, _WORDS
+    from .dedup import _GRAMS5_OF_W, _WORDS
 
     docs = load(spark, sf_dir, "documents")
     cand = docs.filter(F.col("doc_id") % 10 != 0)
@@ -446,7 +446,7 @@ def curation_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id"))
     reps_src = reps.join(kept_small.select("doc_id", "source"), "doc_id")
-    gh = (_widen(docs)
+    gh = (widen_scan(docs, "doc_id")
           .select("doc_id", F.expr(_WORDS).alias("w"))
           .filter(F.size("w") >= _NGRAM_N)
           .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))

@@ -54,7 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..datasets import load, shuffle_width
+from ..datasets import load, shuffle_width, widen_scan
 from ..functions.scalar import fround
 from ..queries import query
 from ..staging import stage
@@ -75,35 +75,6 @@ def _fanout(df: DataFrame, *cols: str) -> DataFrame:
     n = shuffle_width(df.sparkSession)
     return df.repartition(n, *[F.col(c) for c in cols])
 
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Ensure the expensive shingle/token map stage runs wide.
-
-    At 100 TB the parquet scan is split into ~128 MB tasks and this is a
-    no-op. On a small input (one file ⇒ one partition — exactly the local
-    bench) the whole interpreted-HOF shingle stage would otherwise run in
-    a single task; pay one linear row-shuffle to spread it. Keyed by
-    doc_id (not round-robin) so the output partitioning is deterministic.
-
-    Streaming frames pass through untouched: `.rdd` is illegal on them,
-    and a micro-batch's parallelism is the source's concern (e.g.
-    maxFilesPerTrigger), not a repartition's.
-
-    The width probe is `inputFiles()` — pure metadata, no RDD
-    conversion (the r2 `df.rdd.getNumPartitions()` probe forced a plan
-    analysis + Py4J round-trip per call). One file can split into many
-    tasks but never the reverse, so `files >= n` proves the scan is
-    already wide; fewer files (or a non-file frame, which reports [])
-    pays the one linear row-shuffle."""
-    if df.isStreaming:
-        return df
-    n = shuffle_width(df.sparkSession)
-    try:
-        if len(df.inputFiles()) >= n:
-            return df
-    except Exception:
-        pass
-    return df.repartition(n, F.col("doc_id"))
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash-groupBy).
@@ -145,7 +116,7 @@ _SHINGLES_OF_W = (
 def _shingle_arrays(docs: DataFrame) -> DataFrame:
     """(doc_id, sh_arr): distinct 3-gram shingle array per document;
     documents with <3 words dropped. split() runs once per row."""
-    return (_widen(docs)
+    return (widen_scan(docs, "doc_id")
             .select("doc_id", F.expr(_WORDS).alias("w"))
             .filter(F.size("w") >= 3)
             .select("doc_id", F.expr(_SHINGLES_OF_W).alias("sh_arr")))
@@ -470,7 +441,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint). Per-token xxhash64; bit i of the signature
     is the sign of Σ_tokens (±count) for that bit. 64 conditional-sum
     aggregates in one hash-aggregate pass."""
-    tokens = (_widen(docs)
+    tokens = (widen_scan(docs, "doc_id")
               .select("doc_id",
                       F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
                       .alias("tok"))
@@ -994,7 +965,7 @@ def decontaminate_ngram_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Digest checkpoint (r5): bench and train are disjoint filters of
     # one 5-gram explode — materialize its (doc_id, hash) digests once
     # instead of exploding the corpus per branch (the attrition idiom).
-    gh = (_widen(docs)
+    gh = (widen_scan(docs, "doc_id")
           .select("doc_id", F.expr(_WORDS).alias("w"))
           .filter(F.size("w") >= _NGRAM_N)
           .select("doc_id", F.explode(F.expr(_GRAMS5_OF_W)).alias("gram"))
@@ -1056,7 +1027,7 @@ def _span_frames(docs: DataFrame):
     digest) — the standard tokenized-intermediate tradeoff: storage
     ~doubles during the query, each downstream pass saves a scan+split.
     Measured 1.33 -> 1.06 s warm for trim at sf0.1."""
-    base = (_widen(docs)
+    base = (widen_scan(docs, "doc_id")
             .select("doc_id", F.expr(_WORDS).alias("w"))
             .transform(stage))
     wins = (base.filter(F.size("w") >= _SPAN_W)

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..datasets import load
 from ..queries import query
 from .dedup import _DUCK_SHINGLES, _DUCK_WORDS, JACCARD_T
-from ..memo import evict_stale
+from ..memo import session_memo
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
@@ -109,11 +109,7 @@ def connected_components(edges: DataFrame, src: str, dst: str,
                          F.col("label").alias("cluster_id"))
 
 
-# Session-scoped memo for the converged cluster frame (checkpoint-backed;
-# keyed by applicationId; stale-session entries are swept on every miss
-# via memo.evict_stale — the appId key alone would only ORPHAN them,
-# ADVICE r5). Within a session the memo assumes sf_dir's parquet is an
-# immutable snapshot (see memo.py).
+# Session memo (memo.py) for the converged, checkpoint-backed cluster frame.
 _CLUSTER_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -180,15 +176,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r4 #4)."""
     from .dedup import ngram_jaccard_threshold
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTER_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_CLUSTER_MEMO, memo_key[0])
-    pairs = ngram_jaccard_threshold(spark, sf_dir).select("doc1", "doc2")
-    result = connected_components(pairs, "doc1", "doc2")
-    _CLUSTER_MEMO[memo_key] = result
-    return result
+    return session_memo(
+        _CLUSTER_MEMO, (spark.sparkContext.applicationId, sf_dir),
+        lambda: connected_components(
+            ngram_jaccard_threshold(spark, sf_dir).select("doc1", "doc2"),
+            "doc1", "doc2"))
 
 
 @query(
@@ -344,15 +336,11 @@ def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     session (driver sweep, bench) reuse the checkpoint-backed result."""
     from .dedup import ngram_jaccard_threshold
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "twostar")
-    hit = _CLUSTER_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_CLUSTER_MEMO, memo_key[0])
-    pairs = ngram_jaccard_threshold(spark, sf_dir).select("doc1", "doc2")
-    result = connected_components_twostar(pairs, "doc1", "doc2")
-    _CLUSTER_MEMO[memo_key] = result
-    return result
+    return session_memo(
+        _CLUSTER_MEMO, (spark.sparkContext.applicationId, sf_dir, "twostar"),
+        lambda: connected_components_twostar(
+            ngram_jaccard_threshold(spark, sf_dir).select("doc1", "doc2"),
+            "doc1", "doc2"))
 
 
 @query(

@@ -28,7 +28,7 @@ from ..datasets import load, shuffle_width, widen_scan
 from ..staging import stage
 from ..functions.scalar import fround
 from ..queries import query
-from ..memo import evict_stale
+from ..memo import session_memo
 
 QUERY_VEC_ID = 0  # fixed probe vector for the deterministic top-k queries
 TOP_K = 10
@@ -260,8 +260,7 @@ def lsh_bucket_cols(n_tables: int = N_TABLES,
 # but each constructed its own staged copy — two identical checkpoint
 # builds per session in the bench's cold pass (and one more per extra
 # construction). One memoized build per (session, sf_dir) is the
-# write-time index layout the docstrings promise; the _INDEX_MEMO /
-# _CLUSTER_MEMO pattern, stale sessions swept via evict_stale.
+# write-time index layout the docstrings promise (session memo, memo.py).
 _BUCKET_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -269,15 +268,11 @@ def _bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The staged registered-parameter LSH bucket index, one build per
     session. Referee knob sweeps (non-registered n_tables/planes) keep
     building theirs inline via lsh_batch_topk."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BUCKET_MEMO.get(key)
-    if hit is not None:
-        return hit
-    evict_stale(_BUCKET_MEMO, key[0])
-    idx = stage(widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
-                .withColumn("buckets", F.array(*lsh_bucket_cols())))
-    _BUCKET_MEMO[key] = idx
-    return idx
+    return session_memo(
+        _BUCKET_MEMO, (spark.sparkContext.applicationId, sf_dir),
+        lambda: stage(
+            widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
+            .withColumn("buckets", F.array(*lsh_bucket_cols()))))
 
 
 @query("ann_lsh_topk")  # rows-only: hyperplane hashing not SQL-oracle-able
@@ -373,9 +368,11 @@ def lsh_batch_topk(emb: DataFrame, probes: DataFrame,
     Either LSH parameter may be overridden alone — the other defaults
     to the registered value (ADVICE r8 #3: the old referee signature
     raised TypeError on n_tables-without-planes). ``emb_b`` lets the
-    caller supply a pre-built (…, buckets) index table — the registered
-    query passes the staged write-time index (see ann_batch_topk);
-    referee knob sweeps keep building theirs inline.
+    caller supply a pre-built (…, buckets) index table built with the
+    registered parameters — the registered query passes the staged
+    write-time index (see ann_batch_topk); referee knob sweeps keep
+    building theirs inline. With ``emb_b``, an override equal to the
+    registered value is accepted; any other raises ValueError.
 
     At 100 TB: `buckets` is a write-time index column, the panel is
     broadcast (panels are small by construction), and the only wide
@@ -391,19 +388,19 @@ def lsh_batch_topk(emb: DataFrame, probes: DataFrame,
     narrower than both the scored rows and the index rows — and at
     scale it stands where the join-back's own vec_id shuffle would be;
     the per-probe window exchange still carries scored rows only."""
-    if emb_b is not None and not (n_tables is None
-                                  and planes_per_table is None):
-        # ADVICE r12: a prebuilt index carries its own LSH parameters —
-        # silently computing-and-ignoring an override here would serve
-        # buckets built with the index's original params.
-        raise ValueError(
-            "emb_b is prebuilt; n_tables/planes_per_table overrides "
-            "would be ignored — pass one or the other")
     L = N_TABLES if n_tables is None else n_tables
     p = PLANES_PER_TABLE if planes_per_table is None else planes_per_table
     if emb_b is None:
         emb_b = emb.withColumn("buckets",
                                F.array(*lsh_bucket_cols(L, p)))
+    elif (L, p) != (N_TABLES, PLANES_PER_TABLE):
+        # ADVICE r12: a prebuilt index carries the registered LSH
+        # parameters — silently ignoring a different override here would
+        # serve buckets built with the index's params.
+        raise ValueError(
+            f"emb_b is prebuilt with n_tables={N_TABLES}, "
+            f"planes_per_table={PLANES_PER_TABLE}; got n_tables={L}, "
+            f"planes_per_table={p}")
     probe_b = (emb_b.join(F.broadcast(probes),
                           emb_b.vec_id == probes.probe_id)
                .select("probe_id",
@@ -684,14 +681,8 @@ def _best_cell(cents: list[list[float]]) -> Column:
     return F.element_at(F.sort_array(scores, asc=False), 1)
 
 
-# Session-scoped training memos (deterministic, KB-sized driver
-# objects; stale-session entries swept on miss via memo.evict_stale —
-# see memo.py). Unlocked BY CHOICE: a first-construction race between
-# threads double-computes the same deterministic result and the last
-# write wins — tolerated because every value is pure-function-of-inputs
-# (result equality under a real race is pinned by
-# tests/test_concurrency.py); a lock would serialize all first calls
-# behind a multi-second training job.
+# Session memo (memo.py) for training results (deterministic, KB-sized
+# driver objects).
 _TRAIN_MEMO: dict[tuple, tuple] = {}
 
 
@@ -715,11 +706,13 @@ def kmeans_train(
     instead of re-running the Lloyd loop each call (same pattern as
     datasets.py's scan cache; appId key evicts naturally on session
     restart)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, k, max_iter)
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
+    return session_memo(
+        _TRAIN_MEMO, (spark.sparkContext.applicationId, sf_dir, k, max_iter),
+        lambda: _kmeans_train(spark, sf_dir, k, max_iter))
+
+
+def _kmeans_train(spark: SparkSession, sf_dir: str, k: int,
+                  max_iter: int) -> tuple[list[list[float]], list[float]]:
     # widen_scan (r12): each Lloyd iteration evaluates K HOF dots per row
     # over this persisted frame; on the one-row-group local file all
     # iterations ran in a single task. No-op at 100 TB (see widen_scan).
@@ -729,7 +722,6 @@ def kmeans_train(
     try:
         first = base.head()
         if first is None:  # no trainable vectors (zero-row / all-zero)
-            _TRAIN_MEMO[memo_key] = ([], [])
             return [], []
         dim = len(first["nv"])
         init = {int(r["vec_id"]): [float(x) for x in r["nv"]]
@@ -760,7 +752,6 @@ def kmeans_train(
             cents = new_cents
             if shift < KMEANS_TOL:
                 break
-        _TRAIN_MEMO[memo_key] = (cents, history)
         return cents, history
     finally:
         base.unpersist()
@@ -958,24 +949,21 @@ def _pq_sample(spark: SparkSession, sf_dir: str):
     residual (`_pq_residual_codebooks`) training. (None, None) when the
     probe is absent (zero-row corpus) or direction-less (zero norm,
     dropped by _normalized): nothing to train toward, no neighbors."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq_sample")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    import numpy as np
+    def build():
+        import numpy as np
 
-    emb = _normalized(load(spark, sf_dir, "embeddings"))
-    rows = (emb.filter(F.col("vec_id") < PQ_TRAIN_N)
-            .select("vec_id", "nv").collect())
-    by_id = {int(r["vec_id"]): [float(v) for v in r["nv"]] for r in rows}
-    if QUERY_VEC_ID not in by_id:
-        _TRAIN_MEMO[memo_key] = (None, None)
-        return None, None
-    x = np.array([by_id[i] for i in sorted(by_id)])
-    qv = by_id[QUERY_VEC_ID]
-    _TRAIN_MEMO[memo_key] = (x, qv)
-    return x, qv
+        emb = _normalized(load(spark, sf_dir, "embeddings"))
+        rows = (emb.filter(F.col("vec_id") < PQ_TRAIN_N)
+                .select("vec_id", "nv").collect())
+        by_id = {int(r["vec_id"]): [float(v) for v in r["nv"]]
+                 for r in rows}
+        if QUERY_VEC_ID not in by_id:
+            return None, None
+        return np.array([by_id[i] for i in sorted(by_id)]), by_id[QUERY_VEC_ID]
+
+    return session_memo(
+        _TRAIN_MEMO, (spark.sparkContext.applicationId, sf_dir, "pq_sample"),
+        build)
 
 
 def _lloyd_books(x) -> list[list[list[float]]]:
@@ -1008,18 +996,14 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str
     """(codebooks, query_vector): raw-vector per-subspace codebooks
     (see _pq_sample / _lloyd_books). Memoized per (application, sf_dir)
     like kmeans_train."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    x, qv = _pq_sample(spark, sf_dir)
-    if x is None:
-        _TRAIN_MEMO[memo_key] = (None, None)
-        return None, None
-    books = _lloyd_books(x)
-    _TRAIN_MEMO[memo_key] = (books, qv)
-    return books, qv
+    def build():
+        x, qv = _pq_sample(spark, sf_dir)
+        if x is None:
+            return None, None
+        return _lloyd_books(x), qv
+
+    return session_memo(
+        _TRAIN_MEMO, (spark.sparkContext.applicationId, sf_dir, "pq"), build)
 
 
 def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
@@ -1040,26 +1024,23 @@ def _pq_residual_codebooks(spark: SparkSession, sf_dir: str):
     _best_cell's sort_array rule), subtract, Lloyd the residuals
     per-subspace. Memoized like the raw books; returns (None, None,
     None) when the corpus is untrainable or the probe absent."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq_res")
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_TRAIN_MEMO, memo_key[0])
-    import numpy as np
+    def build():
+        import numpy as np
 
-    cents, _ = kmeans_train(spark, sf_dir)
-    x, qv = _pq_sample(spark, sf_dir)
-    if not cents or x is None:
-        _TRAIN_MEMO[memo_key] = (None, None, None)
-        return None, None, None
-    C = np.array(cents)
-    d = x @ C.T
-    # argmax with ties to the HIGHER index (_best_cell's rule: struct
-    # sort descends on (score, cell), so equal scores pick the larger c)
-    assign = (d.shape[1] - 1) - np.argmax(d[:, ::-1], axis=1)
-    books = _lloyd_books(x - C[assign])
-    _TRAIN_MEMO[memo_key] = (books, qv, cents)
-    return books, qv, cents
+        cents, _ = kmeans_train(spark, sf_dir)
+        x, qv = _pq_sample(spark, sf_dir)
+        if not cents or x is None:
+            return None, None, None
+        C = np.array(cents)
+        d = x @ C.T
+        # argmax with ties to the HIGHER index (_best_cell's rule: struct
+        # sort descends on (score, cell), so equal scores pick the larger c)
+        assign = (d.shape[1] - 1) - np.argmax(d[:, ::-1], axis=1)
+        return _lloyd_books(x - C[assign]), qv, cents
+
+    return session_memo(
+        _TRAIN_MEMO, (spark.sparkContext.applicationId, sf_dir, "pq_res"),
+        build)
 
 
 def _sql_arr(vs: list[float]) -> str:
@@ -1110,8 +1091,7 @@ def _residual_sql(cents: list[list[float]]) -> str:
     return f"CASE _cell {branches} END"
 
 
-# Session-scoped serving-index memo (checkpoint-backed DataFrame handle,
-# the graph._CLUSTER_MEMO pattern; stale sessions swept via evict_stale).
+# Session memo (memo.py) for the checkpoint-backed serving index.
 # r12 optimization: the PQ/IVF serving queries recomputed their
 # probe-INDEPENDENT index columns — unit-norm `nv`, trained-cell `_cell`,
 # PQ `codes` — on every execution, serially in the one-row-group scan
@@ -1144,20 +1124,19 @@ def _serving_index(spark: SparkSession, sf_dir: str,
     digest = hashlib.md5(repr((books, cents)).encode()).hexdigest()
     memo_key = (spark.sparkContext.applicationId, sf_dir,
                 books is not None, len(cents) if cents else 0, digest)
-    hit = _INDEX_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_INDEX_MEMO, memo_key[0])
-    idx = widen_scan(load(spark, sf_dir, "embeddings"), "vec_id")
-    idx = _normalized(idx)
-    if cents:
-        idx = idx.withColumn("_cell", _best_cell(cents)["c"].cast("int"))
-    if books is not None:
-        dsub = len(books[0][0])  # sub-vector width
-        idx = idx.withColumn("codes", F.expr(_pq_encode_sql(books, dsub)))
-    idx = stage(idx)
-    _INDEX_MEMO[memo_key] = idx
-    return idx
+
+    def build():
+        idx = _normalized(
+            widen_scan(load(spark, sf_dir, "embeddings"), "vec_id"))
+        if cents:
+            idx = idx.withColumn("_cell", _best_cell(cents)["c"].cast("int"))
+        if books is not None:
+            dsub = len(books[0][0])  # sub-vector width
+            idx = idx.withColumn("codes",
+                                 F.expr(_pq_encode_sql(books, dsub)))
+        return stage(idx)
+
+    return session_memo(_INDEX_MEMO, memo_key, build)
 
 
 @query("pq_topk")  # rows-only: trained codebooks are not oracle SQL

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..datasets import load, widen_scan
 from ..functions.scalar import fround, fround_sql
 from ..queries import query
-from ..memo import evict_stale
+from ..memo import session_memo
 
 # Patterns are deliberately written in the common subset of Java regex
 # (Spark) and RE2 (DuckDB): character classes, \b, {m,}, alternation —
@@ -376,9 +376,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGES = 20  # merge rounds to train (toy scale; the loop is the point)
 
-# Session-scoped memo for trained merge lists (KB-sized driver state;
-# keyed by applicationId; stale-session entries swept on miss via
-# memo.evict_stale — see memo.py for the hygiene + snapshot caveat).
+# Session memo (memo.py) for trained merge lists (KB-sized driver state).
 _BPE_MEMO: dict[tuple, list[tuple[str, str]]] = {}
 
 
@@ -419,11 +417,13 @@ def bpe_train(spark: SparkSession, sf_dir: str,
     deterministic driver loop and BOTH registered consumers
     (bpe_merge_table, bpe_token_stats) call it — the quantizer-memo
     pattern from similarity.kmeans_train."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _BPE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-    evict_stale(_BPE_MEMO, memo_key[0])
+    return session_memo(
+        _BPE_MEMO, (spark.sparkContext.applicationId, sf_dir, n_merges),
+        lambda: _bpe_train(spark, sf_dir, n_merges))
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str,
+               n_merges: int) -> list[tuple[str, str]]:
     docs = load(spark, sf_dir, "documents")
     vocab = (docs.select(F.explode(
                  F.split(F.trim(F.lower(F.col("text"))), r"\s+"))
@@ -469,7 +469,6 @@ def bpe_train(spark: SparkSession, sf_dir: str,
                 f"array('{qa}{qb}')) ELSE concat(acc, array(x)) END, "
                 f"acc -> slice(acc, 2, size(acc) - 1))"))
                 .localCheckpoint())  # truncate per-round lineage
-        _BPE_MEMO[memo_key] = merges
         return merges
     finally:
         vocab.unpersist()

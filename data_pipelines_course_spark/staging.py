@@ -47,8 +47,11 @@ Block lifecycle: repeated query constructions stage fresh tables, but
 neither mode leaks unboundedly — once a constructed frame becomes
 unreachable, Spark's ContextCleaner GC hook drops its checkpoint/cache
 blocks, and under memory pressure persist's MEMORY_AND_DISK evicts LRU
-(recomputing from lineage on re-read). The memoized consumers
-(graph/BPE/kmeans) hold exactly one referenced frame per (app, sf_dir). The iterative driver loops (``operators/graph.py`` label
+(recomputing from lineage on re-read). The six session memos
+(``memo.session_memo``: ``datasets._CACHED``, ``graph._CLUSTER_MEMO``,
+``textprep._BPE_MEMO``, ``similarity._BUCKET_MEMO`` / ``_TRAIN_MEMO`` /
+``_INDEX_MEMO``) hold at most one session's entries, one value per key.
+The iterative driver loops (``operators/graph.py`` label
 propagation, ``operators/textprep.py`` BPE training) are NOT routed
 through this gate: they need lineage TRUNCATION each round — under
 ``persist`` their plan would double every iteration and the fixpoint

@@ -3,7 +3,9 @@
 For every registered query: construct + cold noop run, then min-of-N
 warm re-runs of the constructed frame. One JSON line per query on
 stdout (append-friendly for /tmp logs), sorted summary at the end on
-stderr. Protocol matches the r12 sweep so rounds are comparable.
+stderr. A query that fails prints {"q": name, "error": ...} instead and
+the sweep goes on. Protocol matches the r12 sweep so rounds are
+comparable.
 
 Usage: python scripts/sweep_registry.py [--reps=3] [name ...]
 """
@@ -14,6 +16,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,26 +43,36 @@ def main() -> None:
     queries = all_queries()
     todo = names or list(queries)
     rows = []
-    for name in todo:
-        ld = loadavg()
-        t0 = time.perf_counter()
-        df = queries[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        cold = round(time.perf_counter() - t0, 3)
-        warm = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            warm = min(warm, time.perf_counter() - t0)
-        rec = {"q": name, "cold": cold, "warm": round(warm, 3), "load": ld}
-        rows.append(rec)
-        print(json.dumps(rec), flush=True)
+    try:
+        for name in todo:
+            try:
+                ld = loadavg()
+                t0 = time.perf_counter()
+                df = queries[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                cold = round(time.perf_counter() - t0, 3)
+                warm = float("inf")
+                for _ in range(reps):
+                    t0 = time.perf_counter()
+                    df.write.format("noop").mode("overwrite").save()
+                    warm = min(warm, time.perf_counter() - t0)
+            except Exception as e:
+                # One failing query must not abort the sweep: record it
+                # and go on to the next.
+                traceback.print_exc()
+                print(json.dumps({"q": name, "error": repr(e)}), flush=True)
+                continue
+            rec = {"q": name, "cold": cold, "warm": round(warm, 3),
+                   "load": ld}
+            rows.append(rec)
+            print(json.dumps(rec), flush=True)
+    finally:
+        spark.stop()
     rows.sort(key=lambda r: -r["warm"])
     print("== slowest warm ==", file=sys.stderr)
     for r in rows[:30]:
         print(f"  {r['q']}: warm {r['warm']} cold {r['cold']} "
               f"(load {r['load']})", file=sys.stderr)
-    spark.stop()
 
 
 if __name__ == "__main__":

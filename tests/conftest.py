@@ -6,6 +6,7 @@ value hash)."""
 from __future__ import annotations
 
 import math
+import warnings
 
 import duckdb
 import pandas as pd
@@ -16,6 +17,20 @@ from data_pipelines_course_spark.session import get_spark
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
+
+
+def pytest_collection_finish(session):
+    """Warn when the default `-m "not slow"` tier (pytest.ini) deselects
+    every collected test — e.g. naming one slow test on the command line
+    — so an empty run is not mistaken for a pass."""
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    deselected = reporter.stats.get("deselected", []) if reporter else []
+    if (session.config.option.markexpr == "not slow" and deselected
+            and not session.items):
+        msg = (f'all {len(deselected)} collected tests are marked slow and '
+               f'were deselected by the default -m "not slow"; rerun with '
+               f'-m "slow or not slow" to run them')
+        warnings.warn(pytest.PytestWarning(msg))
 
 
 @pytest.fixture(scope="session")

@@ -55,13 +55,37 @@ def test_memo_eviction_drops_stale_session_entries(spark):
     SparkSessions would otherwise accumulate DataFrames bound to stopped
     SparkContexts. Simulated with planted foreign-appId entries — the
     next miss removes them while live-session entries survive."""
-    from data_pipelines_course_spark.memo import evict_stale
+    from data_pipelines_course_spark.memo import evict_stale, session_memo
     from data_pipelines_course_spark import datasets as D
     from tests.conftest import SF_DIR as sf_dir
 
     # Unit semantics: only foreign appIds are dropped.
     memo = {("dead-app", "x"): 1, ("live-app", "y"): 2}
     evict_stale(memo, "live-app")
+    assert memo == {("live-app", "y"): 2}
+
+    def never():
+        raise AssertionError("build called on a hit")
+
+    # session_memo hit: the identical stored object, build not called.
+    hit = object()
+    memo = {("live-app", "k"): hit}
+    assert session_memo(memo, ("live-app", "k"), never) is hit
+
+    # session_memo miss: foreign-appId entries dropped, live ones kept,
+    # and the built object is stored and returned.
+    built = object()
+    memo = {("dead-app", "x"): 1, ("live-app", "y"): 2}
+    assert session_memo(memo, ("live-app", "z"), lambda: built) is built
+    assert memo == {("live-app", "y"): 2, ("live-app", "z"): built}
+
+    # session_memo: a build that raises stores nothing.
+    def boom():
+        raise RuntimeError("build failed")
+
+    memo = {("live-app", "y"): 2}
+    with pytest.raises(RuntimeError, match="build failed"):
+        session_memo(memo, ("live-app", "z"), boom)
     assert memo == {("live-app", "y"): 2}
 
     # Integration: cache_table's miss path sweeps the planted orphan.

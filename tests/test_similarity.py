@@ -176,3 +176,31 @@ def test_py_cos_zero_norm_sorts_below_every_real_centroid():
     cents = [[0.0, 0.0], [-0.6, -0.8]]
     ranked = sorted(range(2), key=lambda c: -_py_cos([1.0, 0.0], cents[c]))
     assert ranked[0] == 1
+
+
+def test_lsh_batch_topk_prebuilt_index_accepts_registered_overrides(spark):
+    """With a prebuilt ``emb_b``, overrides EQUAL to the registered LSH
+    parameters describe the index as built and are accepted (same rows as
+    no override); only a real mismatch raises ValueError."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from data_pipelines_course_spark.datasets import load
+    from data_pipelines_course_spark.operators.similarity import (
+        N_TABLES, PLANES_PER_TABLE, ann_probe_panel, lsh_batch_topk,
+        lsh_bucket_cols)
+
+    emb = load(spark, SF_DIR, "embeddings")
+    emb_b = emb.withColumn("buckets", F.array(*lsh_bucket_cols()))
+    probes = ann_probe_panel(emb_b)
+    base = sorted(lsh_batch_topk(emb, probes, emb_b=emb_b).collect())
+    assert base
+    for kw in ({"n_tables": N_TABLES},
+               {"planes_per_table": PLANES_PER_TABLE},
+               {"n_tables": N_TABLES, "planes_per_table": PLANES_PER_TABLE}):
+        got = lsh_batch_topk(emb, probes, emb_b=emb_b, **kw).collect()
+        assert sorted(got) == base, kw
+    for kw in ({"n_tables": N_TABLES + 1},
+               {"planes_per_table": PLANES_PER_TABLE + 1}):
+        with pytest.raises(ValueError, match="prebuilt"):
+            lsh_batch_topk(emb, probes, emb_b=emb_b, **kw)
