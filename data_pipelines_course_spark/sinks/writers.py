@@ -28,7 +28,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, functions as F
+from pyspark.sql import DataFrame, Observation, Row, functions as F
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
@@ -226,7 +226,6 @@ def incremental_daily_rollup(events: DataFrame, rollup_path: str,
     partitions written. The `event_date >= since` filter prunes at the
     SCAN when events are date-partitioned; on the flat test parquet it
     is an ordinary pushed filter."""
-    spark = events.sparkSession
     daily = (events
              .withColumn("event_date", F.to_date("ts"))
              .groupBy("event_date", "event_type")
@@ -234,21 +233,23 @@ def incremental_daily_rollup(events: DataFrame, rollup_path: str,
                   F.sum("value").alias("sum_value")))
     if since is not None:
         daily = daily.filter(F.col("event_date") >= F.lit(since))
-    # Persist the (tiny: days × types rows) rollup delta so the returned
-    # partition count is a scan of the cached aggregate, not a second
-    # pass over events. Dynamic overwrite is a per-WRITE option, not a
-    # session-conf toggle — the toggle races with concurrent writers on
-    # the same session (see streaming.jobs.idempotent_batch_sink).
-    daily = daily.persist()
-    try:
-        (daily.repartitionByRange("event_date")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("event_date")
-         .parquet(rollup_path))
-        return daily.select("event_date").distinct().count()
-    finally:
-        daily.unpersist()
+    # The partition count rides the write job as an Observation (no extra
+    # pass, as in plans/observe.py): collect_set, since observed metrics
+    # reject distinct aggregates, plus a flag for the NULL-date default
+    # partition collect_set skips. Hash repartition keeps one file per
+    # date without a range-sampling job. Dynamic overwrite is a per-WRITE
+    # option: a session-conf toggle races with concurrent writers on the
+    # same session (see streaming.jobs.idempotent_batch_sink).
+    obs = Observation()
+    (daily.observe(obs, F.size(F.collect_set("event_date")).alias("dates"),
+                   F.bool_or(F.col("event_date").isNull()).alias("null_date"))
+     .repartition("event_date")
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("event_date")
+     .parquet(rollup_path))
+    got = obs.get
+    return got["dates"] + bool(got["null_date"])
 
 
 def write_xml(df: DataFrame, path: str, row_tag: str = "row",
@@ -326,8 +327,6 @@ def ledgered_write(df: DataFrame, path: str,
     import hashlib
     import json
     import time
-
-    from pyspark.sql import Observation, functions as F
 
     obs = Observation()
     audited = df.observe(obs, F.count(F.lit(1)).alias("rows"))

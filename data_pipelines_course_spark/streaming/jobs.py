@@ -447,17 +447,19 @@ def rollup_maintenance_sink(rollup_path: str):
     into identical state. At 100 TB both steps stay partition-granular:
     the log write is one batch, the recompute reads only the in-flight
     dates' slice of the log (date-partitioning the log turns that into
-    partition pruning)."""
+    partition pruning). Spark jobs per micro-batch: 6 = probe (2), log
+    write (1), rollup write (3); the log read knows its schema (no job)."""
     from ..sinks.writers import incremental_daily_rollup
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        n, low = batch_df.select(F.count(F.lit(1)),
+                                 F.min(F.to_date("ts"))).head()
+        if n == 0:
             return
-        spark = batch_df.sparkSession
         log_path = rollup_path + "_events"
         idempotent_batch_sink(log_path)(batch_df, batch_id)
-        low = batch_df.select(F.min(F.to_date("ts"))).head()[0]
-        log = spark.read.parquet(log_path).drop("_batch_id")
+        log = (batch_df.sparkSession.read.schema(batch_df.schema)
+               .parquet(log_path).drop("_batch_id"))
         # A non-empty batch whose timestamps are ALL NULL has no date
         # watermark (min is None; .isoformat() crashed the sink — review
         # r5). Fall back to a full recompute: correct for any input, and
@@ -541,7 +543,8 @@ def scd2_maintenance_sink(dim_path: str, buckets: int = SCD2_BUCKETS):
     is the correct granularity: work per micro-batch is O(touched
     users' history), not O(dimension). At 100 TB the log is also
     bucket-partitioned, turning step 2's history re-read into partition
-    pruning instead of a full-log scan."""
+    pruning instead of a full-log scan. Spark jobs per micro-batch: 5 =
+    probe (2), log write (1), dim write (2); the log read needs no job."""
     from ..operators.temporal import scd2_intervals
 
     # NULL user_ids bucket to the sentinel N (one shared expression for
@@ -600,17 +603,15 @@ def scd2_maintenance_sink(dim_path: str, buckets: int = SCD2_BUCKETS):
             )
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        touched = batch_df.select(F.collect_set(bucket_of)).head()[0]
+        if not touched:
             return
         spark = batch_df.sparkSession
         _reject_legacy_layout(spark)
         log_path = dim_path + "_events"
         idempotent_batch_sink(log_path)(batch_df, batch_id)
-        touched = [int(r["b"]) for r in
-                   (batch_df.select(bucket_of.alias("b"))
-                    .distinct().collect())]
-        log = (spark.read.parquet(log_path).drop("_batch_id")
-               .filter(bucket_of.isin(touched)))
+        log = (spark.read.schema(batch_df.schema).parquet(log_path)
+               .drop("_batch_id").filter(bucket_of.isin(touched)))
         dim = (scd2_intervals(log)
                .withColumn("bucket", bucket_of))
         (dim.write.mode("overwrite")
@@ -680,7 +681,7 @@ def dedup_index_sink(index_path: str, hits_path: str):
             # differ from the first run's. Restrict the probe to bands
             # from STRICTLY EARLIER batches — partition pruning makes
             # this a metadata filter, not a scan.
-            index = (spark.read.parquet(index_path)
+            index = (spark.read.schema(bands.schema).parquet(index_path)
                      .filter(F.col("_batch_id") < F.lit(batch_id))
                      .drop("_batch_id"))
         else:  # first batch: no index yet

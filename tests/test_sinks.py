@@ -177,6 +177,33 @@ def test_incremental_daily_rollup_matches_full_recompute(spark, tmp_path):
         assert os.path.getmtime(os.path.join(path, d)) == mtime
 
 
+def test_incremental_daily_rollup_counts_null_date_partition(spark, tmp_path):
+    """The returned partition count comes from an Observation on the
+    write job; it must equal the written table's distinct event_date
+    count, the NULL-ts rows' default partition included."""
+    import datetime as dt
+
+    from data_pipelines_course_spark.sinks.writers import (
+        incremental_daily_rollup,
+    )
+
+    events = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1, 9), 10, "click", 1.0),
+         (2, dt.datetime(2024, 1, 1, 17), 11, "view", 2.0),
+         (3, dt.datetime(2024, 1, 3, 8), 12, "click", 3.0),
+         (4, None, 13, "view", 4.0)],
+        "event_id bigint, ts timestamp, user_id bigint, "
+        "event_type string, value double")
+    path = str(tmp_path / "rollup")
+
+    n = incremental_daily_rollup(events, path)
+    written = spark.read.parquet(path).select("event_date").distinct()
+    assert n == written.count() == 3
+    assert written.filter("event_date IS NULL").count() == 1
+    # A watermark past every date writes nothing and counts nothing.
+    assert incremental_daily_rollup(events, path, since="2030-01-01") == 0
+
+
 def test_parquet_bloom_filter_written_and_content_identical(spark, tmp_path):
     """write_parquet_with_bloom must (a) actually embed bloom bytes —
     observable as a strictly larger on-disk footprint than the identical

@@ -692,6 +692,47 @@ def test_rollup_maintenance_all_null_ts_batch(spark, tmp_path):
     assert got[(None, "click")] == 1  # undated rows keep their own group
 
 
+def test_maintenance_sinks_job_budget(spark, tmp_path):
+    """A warm micro-batch runs at most 6 rollup jobs (probe, log write,
+    rollup write) and 5 SCD2 jobs (probe, log write, dim write): no
+    isEmpty() pass, no parquet footer job on the log read, no count the
+    sink throws away. Each sink call runs under its own job group."""
+    from data_pipelines_course_spark.datasets import load
+    from .conftest import SF_DIR
+
+    events = load(spark, SF_DIR, "events")
+    sc = spark.sparkContext
+    sinks = {"rollup": jobs.rollup_maintenance_sink(str(tmp_path / "rollup")),
+             "scd2": jobs.scd2_maintenance_sink(str(tmp_path / "dim"))}
+    try:
+        for batch_id in (0, 1):
+            batch = events.filter(F.col("event_id") % 2 == batch_id)
+            for name, sink in sinks.items():
+                sc.setJobGroup(f"{tmp_path.name}-{name}-{batch_id}", name)
+                sink(batch, batch_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = {name: len(sc.statusTracker().getJobIdsForGroup(
+        f"{tmp_path.name}-{name}-1")) for name in sinks}
+    assert n_jobs["rollup"] <= 6, n_jobs
+    assert n_jobs["scd2"] <= 5, n_jobs
+
+
+def test_maintenance_sinks_skip_empty_batch(spark, tmp_path):
+    """An empty micro-batch (events schema, no rows) writes nothing: the
+    one-aggregate probe of each sink must still return before the log
+    write, so neither `<path>_events` nor `<path>` is created."""
+    empty = spark.createDataFrame(
+        [], "event_id bigint, ts timestamp, user_id bigint, "
+            "event_type string, value double")
+    rollup, dim = tmp_path / "rollup", tmp_path / "dim"
+    jobs.rollup_maintenance_sink(str(rollup))(empty, 0)
+    jobs.scd2_maintenance_sink(str(dim))(empty, 0)
+    for path in (rollup, dim):
+        assert not path.exists()
+        assert not (tmp_path / f"{path.name}_events").exists()
+
+
 def test_trending_topk_matches_batch_and_replays_idempotent(spark, tmp_path):
     """Trending top-k: append-mode sliding counts + per-window rank in
     foreachBatch. The served table must (a) match a batch computation of
